@@ -1,6 +1,6 @@
 from pyspark_data_engineering_assignment_spark.state.store import ParquetStateStore, StateStore
 
-__all__ = ["ParquetStateStore", "StateStore", "JdbcStateStore", "DuckDBStateStore"]
+__all__ = ["ParquetStateStore", "StateStore", "JdbcStateStore"]
 
 
 def __getattr__(name):
@@ -11,10 +11,4 @@ def __getattr__(name):
         )
 
         return JdbcStateStore
-    if name == "DuckDBStateStore":
-        from pyspark_data_engineering_assignment_spark.state.duckdb_store import (
-            DuckDBStateStore,
-        )
-
-        return DuckDBStateStore
     raise AttributeError(name)

@@ -13,12 +13,11 @@ steps (``Mechanism Y.py:147-160``, ``:169-183``, ``:188-206``):
              <counter> = <target>.<counter> + EXCLUDED.<counter>, ...
              last_updated = EXCLUDED.last_updated;
 
-``DuckDBStateStore`` preserves the UPSERT *semantics* but folds the temp
-table into a registered pandas view and the aggregation into the one
-statement. This class preserves the *protocol*: a real temp table is
-created and loaded, the emitted UPSERT is shape-identical to the
-reference statement (pinned modulo identifiers in
-``tests/test_jdbc_store.py``), and the temp table is dropped afterwards.
+This class preserves that *protocol*: a real temp table is created and
+loaded, the emitted UPSERT is shape-identical to the reference statement
+(pinned modulo identifiers in ``tests/test_jdbc_store.py``), and the
+temp table is dropped afterwards. It is the one RDBMS backend; the
+distributed backend is ``ParquetStateStore``.
 
 The connection is pluggable DB-API: tested with DuckDB's driver (which
 speaks the same ``ON CONFLICT`` dialect as PostgreSQL), structured so a
@@ -36,7 +35,7 @@ settings, type OIDs, transaction-isolation defaults) are untested::
         spark, connect=lambda: psycopg2.connect(dsn), paramstyle="format"
     )
 
-Deliberate hardenings over the reference, matching the other backends:
+Deliberate hardenings over the reference, matching the parquet backend:
 
   * merges are idempotent by batch_id (``_applied_batches`` ledger in
     the same transaction - the reference double-counts on replay);
@@ -49,7 +48,11 @@ Deliberate hardenings over the reference, matching the other backends:
   * the batch is (re-)aggregated in SPARK before crossing the driver,
     so the temp table never holds duplicate keys (PostgreSQL raises
     "ON CONFLICT DO UPDATE command cannot affect row a second time"
-    on duplicate source keys).
+    on duplicate source keys), with the parquet backend's overflow-checked
+    SUM: a money total DECIMAL(18,2) cannot hold refuses the merge
+    instead of becoming NULL under ANSI off;
+  * one lock serializes every use of the single connection, so the
+    pipeline's concurrent merges to different tables are safe.
 
 Scale honesty: like the reference's JDBC flow, per-batch aggregates
 cross the driver (bounded by ``max_batch_rows``); full-state reads come
@@ -62,13 +65,77 @@ swap. The 100 TB path remains ``ParquetStateStore``.
 from __future__ import annotations
 
 import json
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DecimalType
+from pyspark.sql.types import (
+    DataType,
+    DecimalType,
+    IntegerType,
+    LongType,
+    StringType,
+    TimestampType,
+)
 
-from pyspark_data_engineering_assignment_spark.state.duckdb_store import _ddl_type
-from pyspark_data_engineering_assignment_spark.state.store import StateTableSpec
+from pyspark_data_engineering_assignment_spark.state.store import (
+    StateTableSpec,
+    _check_migration,
+    _checked_counter_total,
+)
+
+
+def _ddl_type(dt: DataType) -> str:
+    if isinstance(dt, StringType):
+        return "VARCHAR"
+    if isinstance(dt, IntegerType):
+        return "INTEGER"
+    if isinstance(dt, LongType):
+        return "BIGINT"
+    if isinstance(dt, DecimalType):
+        return f"DECIMAL({dt.precision},{dt.scale})"
+    if isinstance(dt, TimestampType):
+        return "TIMESTAMP"
+    raise TypeError(f"unsupported state column type: {dt}")
+
+
+def migration_statements(
+    old_spec: StateTableSpec, new_spec: StateTableSpec
+) -> list[str]:
+    """Portable ALTER TABLE plan for evolving ``old_spec`` into
+    ``new_spec`` - the SQL every targeted engine (DuckDB, PostgreSQL)
+    accepts verbatim: ``ADD COLUMN`` (with ``DEFAULT 0`` + backfill for
+    new sum_cols), ``ALTER COLUMN ... SET DATA TYPE ... USING CAST``
+    for type changes (the explicit USING clause matters: PostgreSQL
+    rejects ``SET DATA TYPE`` without it for any change lacking an
+    assignment cast, e.g. VARCHAR->BIGINT, while DuckDB accepts the
+    USING form too; only the DuckDB dialect is exercised by tests in
+    this sandbox), ``DROP COLUMN`` for removals."""
+    old_fields = {f.name: f for f in old_spec.schema.fields}
+    new_fields = {f.name: f for f in new_spec.schema.fields}
+    stmts = []
+    for name, f in new_fields.items():
+        ddl = _ddl_type(f.dataType)
+        if name not in old_fields:
+            default = " DEFAULT 0" if name in new_spec.sum_cols else ""
+            stmts.append(
+                f"ALTER TABLE {old_spec.name} ADD COLUMN {name} {ddl}{default}"
+            )
+            if name in new_spec.sum_cols:
+                # DEFAULT covers future inserts; backfill existing rows
+                stmts.append(
+                    f"UPDATE {old_spec.name} SET {name} = 0 "
+                    f"WHERE {name} IS NULL"
+                )
+        elif _ddl_type(old_fields[name].dataType) != ddl:
+            stmts.append(
+                f"ALTER TABLE {old_spec.name} ALTER COLUMN {name} "
+                f"SET DATA TYPE {ddl} USING CAST({name} AS {ddl})"
+            )
+    for name in old_fields:
+        if name not in new_fields:
+            stmts.append(f"ALTER TABLE {old_spec.name} DROP COLUMN {name}")
+    return stmts
 
 
 def create_table_sql(spec: StateTableSpec) -> str:
@@ -141,12 +208,19 @@ class JdbcStateStore:
     autocommit mode (transactions are driven explicitly with
     BEGIN/COMMIT/ROLLBACK statements, which every targeted engine
     accepts as plain SQL). ``paramstyle``: ``"qmark"`` (DuckDB) or
-    ``"format"`` (psycopg). ``max_batch_rows`` bounds the driver
-    crossing exactly like ``DuckDBStateStore``.
-    """
+    ``"format"`` (psycopg).
 
-    # one connection, explicit transactions: merges must be sequential
-    supports_concurrent_merges = False
+    ``max_batch_rows`` guards the driver boundary: per-batch aggregates
+    cross the driver here, which is correct for dimension-sized state
+    but silently wrong for fact-sized frames - a misrouted 100 TB
+    aggregate would OOM the driver. The guard turns that misuse into
+    an immediate, explainable error.
+
+    One connection with explicit transactions cannot interleave
+    statements from two threads, so ``_lock`` serializes every use of
+    it; a merge holds it from the replay check to COMMIT (the parquet
+    backend's per-table writer lock, applied to the whole connection).
+    """
 
     def __init__(
         self,
@@ -165,6 +239,7 @@ class JdbcStateStore:
         # garbage-collected; duckdb merely tolerates it
         self.con = connect()
         self.cur = self.con.cursor()
+        self._lock = threading.RLock()
         self.cur.execute(
             "CREATE TABLE IF NOT EXISTS _applied_batches ("
             "table_name VARCHAR, batch_id BIGINT, meta VARCHAR, "
@@ -181,27 +256,34 @@ class JdbcStateStore:
         return cls(spark, connect=lambda: duckdb.connect(db_path), **kw)
 
     def _ensure_table(self, spec: StateTableSpec) -> None:
-        if spec.name not in self._created:
-            self.cur.execute(create_table_sql(spec))
-            self._created.add(spec.name)
+        with self._lock:
+            if spec.name not in self._created:
+                self.cur.execute(create_table_sql(spec))
+                self._created.add(spec.name)
 
-    def last_batch_id(self, spec: StateTableSpec) -> int:
+    def _fetchone(self, sql: str, params: list):
         # execute-then-fetch, never chained: DB-API says execute()
         # returns an unspecified value (psycopg: None); only DuckDB
         # happens to return the cursor
-        self.cur.execute(
+        with self._lock:
+            self.cur.execute(sql, params)
+            return self.cur.fetchone()
+
+    def last_batch_id(self, spec: StateTableSpec) -> int:
+        row = self._fetchone(
             f"SELECT batch_id FROM _applied_batches WHERE table_name = {self._ph}",
             [spec.name],
         )
-        row = self.cur.fetchone()
         return row[0] if row else -1
 
     def batch_meta(self, spec: StateTableSpec, batch_id: int) -> dict | None:
-        self.cur.execute(
+        """Metadata recorded with the latest merge for ``batch_id``, or
+        None (mirrors ``ParquetStateStore.batch_meta``: one entry, the
+        latest - a restart replays exactly the last uncommitted batch)."""
+        row = self._fetchone(
             f"SELECT batch_id, meta FROM _applied_batches WHERE table_name = {self._ph}",
             [spec.name],
         )
-        row = self.cur.fetchone()
         if row and row[0] == batch_id and row[1] is not None:
             return json.loads(row[1])
         return None
@@ -216,43 +298,34 @@ class JdbcStateStore:
         JDBC URL that is the drop-in replacement for this fetch)."""
         self._ensure_table(spec)
         cols = ", ".join(spec.schema.fieldNames())
-        self.cur.execute(f"SELECT {cols} FROM {spec.name}")
-        rows = self.cur.fetchall()
+        with self._lock:
+            self.cur.execute(f"SELECT {cols} FROM {spec.name}")
+            rows = self.cur.fetchall()
         return self.spark.createDataFrame(rows, spec.schema)
 
     def migrate_schema(
         self, old_spec: StateTableSpec, new_spec: StateTableSpec
     ) -> int:
-        """Schema evolution over the wire protocol: executes the shared
-        portable ALTER plan (``duckdb_store.migration_statements`` -
-        valid DuckDB and PostgreSQL verbatim) in one explicit
-        transaction. Same rules as both other backends: keys immutable,
-        added sum_cols default 0 with backfill, drops discard, type
-        changes cast. Returns the number of statements executed."""
-        if old_spec.name != new_spec.name:
-            raise ValueError(
-                f"migrate_schema evolves one table in place: "
-                f"{old_spec.name!r} != {new_spec.name!r}"
-            )
-        if tuple(old_spec.key_cols) != tuple(new_spec.key_cols):
-            raise ValueError(
-                "key columns are the table's identity and cannot be "
-                f"migrated: {old_spec.key_cols} -> {new_spec.key_cols}"
-            )
-        from pyspark_data_engineering_assignment_spark.state.duckdb_store import (
-            migration_statements,
-        )
-
-        self._ensure_table(old_spec)
+        """The RDBMS face of ``ParquetStateStore.migrate_schema``: the
+        same evolution expressed as the DDL the reference's Postgres
+        tables would take (``migration_statements`` - valid DuckDB and
+        PostgreSQL verbatim), with identical rules - keys immutable,
+        added sum_cols default 0 with backfill, other added columns
+        NULL, drops discard, type changes cast. One transaction, so a
+        reader on another connection sees the old or the new shape,
+        never half. Returns the number of statements executed."""
+        _check_migration(old_spec, new_spec)
         stmts = migration_statements(old_spec, new_spec)
-        self.cur.execute("BEGIN")
-        try:
-            for s in stmts:
-                self.cur.execute(s)
-            self.cur.execute("COMMIT")
-        except Exception:
-            self.cur.execute("ROLLBACK")
-            raise
+        with self._lock:
+            self._ensure_table(old_spec)
+            self.cur.execute("BEGIN")
+            try:
+                for s in stmts:
+                    self.cur.execute(s)
+                self.cur.execute("COMMIT")
+            except Exception:
+                self.cur.execute("ROLLBACK")
+                raise
         return len(stmts)
 
     def merge_batch(
@@ -263,12 +336,23 @@ class JdbcStateStore:
         now: str | None = None,
         meta: dict | None = None,
     ) -> None:
-        self._ensure_table(spec)
-        if batch_id <= self.last_batch_id(spec):
-            return  # replayed batch: already merged
+        """The reference UPSERT, transactionally paired with the batch-id
+        ledger so a replayed micro-batch is a no-op.
 
-        # Spark-side prep (distributed): drop NULL-keyed rows, aggregate
-        # to unique keys, coalesce counters like the other backends.
+        Raises ``ValueError`` when the batch exceeds ``max_batch_rows``:
+        the ``limit(n+1)`` fetch bounds what can ever reach the driver,
+        so even the failing call stays memory-safe."""
+        with self._lock:
+            self._ensure_table(spec)
+            if batch_id <= self.last_batch_id(spec):
+                return  # replayed batch: already merged
+            rows = self._prepare(spec, batch_agg)
+            self._upsert(spec, rows, batch_id, now, meta)
+
+    def _prepare(self, spec: StateTableSpec, batch_agg: DataFrame) -> list:
+        """Spark-side prep (distributed): drop NULL-keyed rows, aggregate
+        to unique keys with the parquet backend's overflow-checked SUM,
+        then cross the driver bounded by ``max_batch_rows``."""
         key_not_null = F.lit(True)
         for k in spec.key_cols:
             key_not_null = key_not_null & F.col(k).isNotNull()
@@ -277,15 +361,12 @@ class JdbcStateStore:
             .groupBy(*spec.key_cols)
             .agg(
                 *[
-                    F.sum(F.coalesce(F.col(c), F.lit(0)))
-                    .cast(spec.schema[c].dataType)
-                    .alias(c)
+                    _checked_counter_total(c, spec.schema[c].dataType)
                     for c in spec.sum_cols
                 ]
             )
         )
-        # bounded driver crossing: the +1 row proves overflow without
-        # materializing the rest (same guard as DuckDBStateStore)
+        # the +1 row proves overflow without materializing the rest
         rows = prepared.limit(self.max_batch_rows + 1).collect()
         if len(rows) > self.max_batch_rows:
             raise ValueError(
@@ -293,12 +374,12 @@ class JdbcStateStore:
                 f"{self.max_batch_rows}: route fact-sized merges through "
                 "ParquetStateStore (distributed merge)"
             )
+        return rows
 
+    def _upsert(self, spec, rows, batch_id, now, meta) -> None:
         temp = temp_table_name(spec, batch_id)
-        ts_literal = now or None
         n_cols = len(spec.key_cols) + len(spec.sum_cols)
         placeholders = ", ".join([self._ph] * n_cols)
-        ts_expr = f"CAST({self._ph} AS TIMESTAMP)" if ts_literal else "now()"
         try:
             self.cur.execute("BEGIN")
             self.cur.execute(temp_table_sql(spec, temp))
@@ -307,11 +388,11 @@ class JdbcStateStore:
                 for r in rows
             ]
             if params:
-                if ts_literal:
+                if now:
                     self.cur.executemany(
                         f"INSERT INTO {temp} VALUES ({placeholders}, "
                         f"CAST({self._ph} AS TIMESTAMP))",
-                        [p + (ts_literal,) for p in params],
+                        [p + (now,) for p in params],
                     )
                 else:
                     self.cur.executemany(

@@ -109,13 +109,36 @@ MERCHANT_GENDER_SUMMARY = StateTableSpec(
 REFERENCE_TABLES = (MERCHANT_SUMMARY, CUSTOMER_MERCHANT_SUMMARY, MERCHANT_GENDER_SUMMARY)
 
 
+def _check_migration(old_spec: StateTableSpec, new_spec: StateTableSpec) -> None:
+    """The rules every backend's ``migrate_schema`` enforces before it
+    touches data: one table evolves in place, and its key columns are
+    its identity (a key change is a different table - create one and
+    backfill)."""
+    if old_spec.name != new_spec.name:
+        raise ValueError(
+            f"migrate_schema evolves one table in place: "
+            f"{old_spec.name!r} != {new_spec.name!r}"
+        )
+    if tuple(old_spec.key_cols) != tuple(new_spec.key_cols):
+        raise ValueError(
+            "key columns are the table's identity and cannot be "
+            f"migrated: {old_spec.key_cols} -> {new_spec.key_cols}"
+        )
+
+
 class StateStore(Protocol):
     """What ``DetectionPipeline`` requires of a state backend. The full
     surface is declared here - the pipeline calls ``last_batch_id`` (replay
     guard), ``vacuum`` (periodic snapshot GC), and ``batch_meta`` (replayed
     batches report their original sink count) in addition to the
     read/merge pair, so an alternative backend that satisfies this
-    Protocol is guaranteed to work at runtime."""
+    Protocol is guaranteed to work at runtime.
+
+    ``merge_batch`` must be safe to call from concurrent driver threads
+    on DIFFERENT tables: the pipeline submits its three state merges
+    together. ``ParquetStateStore`` runs them concurrently (one writer
+    lock per table); ``JdbcStateStore`` serializes them on its single
+    connection."""
 
     def read_state(self, spec: StateTableSpec) -> DataFrame: ...
 
@@ -138,12 +161,6 @@ class StateStore(Protocol):
 class ParquetStateStore:
     """Hash-bucketed versioned-parquet state store with atomic pointer
     swap and bucket-pruned merges."""
-
-    # Merges to DIFFERENT tables may run from concurrent driver threads:
-    # each table has its own pointer file and snapshot dirs, and Spark's
-    # scheduler interleaves the jobs. (A JDBC/DuckDB backend whose single
-    # connection is not thread-safe leaves this False.)
-    supports_concurrent_merges = True
 
     def __init__(self, spark: SparkSession, root: str, n_buckets: int = 16) -> None:
         self.spark = spark
@@ -428,13 +445,26 @@ class ParquetStateStore:
     def _rebucket_locked(self, spec, new_n_buckets: int) -> int:
         if new_n_buckets < 1:
             raise ValueError(f"new_n_buckets must be >= 1, got {new_n_buckets}")
-        pointer = self._read_pointer(spec.name)
+        return self._rewrite_all_buckets_locked(
+            spec,
+            self._read_pointer(spec.name),
+            self.read_state(spec).select(*spec.schema.fieldNames()),
+            new_n_buckets,
+        )
+
+    def _rewrite_all_buckets_locked(
+        self, spec, pointer: dict, rows: DataFrame, n_buckets: int
+    ) -> int:
+        """Write ``rows`` - the table's full new content - as one new
+        version hashed into ``n_buckets``, swap the pointer to it, and
+        start every superseded snapshot's retention clock. The pointer
+        swap is the single commit point, so a crash before it leaves the
+        old table intact. ``last_batch_id``/``batch_meta`` carry over.
+        Returns the number of non-empty buckets written."""
         version = pointer["next_version"]
         out = os.path.join(self.root, spec.name, f"v={version}")
-        current = self.read_state(spec)
         (
-            current.select(*spec.schema.fieldNames())
-            .withColumn("_bucket", self._bucket_expr(spec, new_n_buckets))
+            rows.withColumn("_bucket", self._bucket_expr(spec, n_buckets))
             .write.mode("overwrite")
             .partitionBy("_bucket")
             .parquet(out)
@@ -456,10 +486,10 @@ class ParquetStateStore:
                 **pointer,
                 "versions": {str(b): version for b in written},
                 "next_version": version + 1,
-                "n_buckets": new_n_buckets,
+                "n_buckets": n_buckets,
             },
         )
-        # every pre-migration snapshot is superseded at once: start its
+        # every pre-rewrite snapshot is superseded at once: start its
         # retention clock now (unreference time), not at its write time
         self._mark_unreferenced(spec.name, pointer["versions"])
         return len(written)
@@ -496,19 +526,8 @@ class ParquetStateStore:
             return self._migrate_schema_locked(old_spec, new_spec)
 
     def _migrate_schema_locked(self, old_spec, new_spec) -> int:
-        if old_spec.name != new_spec.name:
-            raise ValueError(
-                f"migrate_schema evolves one table in place: "
-                f"{old_spec.name!r} != {new_spec.name!r}"
-            )
-        if tuple(old_spec.key_cols) != tuple(new_spec.key_cols):
-            raise ValueError(
-                "key columns are the table's identity and cannot be "
-                f"migrated: {old_spec.key_cols} -> {new_spec.key_cols}"
-            )
+        _check_migration(old_spec, new_spec)
         pointer = self._read_pointer(old_spec.name)
-        version = pointer["next_version"]
-        out = os.path.join(self.root, old_spec.name, f"v={version}")
         old_cols = set(old_spec.schema.fieldNames())
         proj = []
         for f in new_spec.schema.fields:
@@ -518,34 +537,14 @@ class ParquetStateStore:
                 proj.append(F.lit(0).cast(f.dataType).alias(f.name))
             else:
                 proj.append(F.lit(None).cast(f.dataType).alias(f.name))
-        (
-            self.read_state(old_spec)
-            .select(*proj)
-            # keys unchanged => bucket assignment unchanged; rewrite is
-            # still all-buckets because every file's schema changes
-            .withColumn("_bucket", self._bucket_expr(new_spec, pointer["n_buckets"]))
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(out)
+        # keys unchanged => bucket assignment unchanged; the rewrite is
+        # still all-buckets because every file's schema changes
+        return self._rewrite_all_buckets_locked(
+            new_spec,
+            pointer,
+            self.read_state(old_spec).select(*proj),
+            pointer["n_buckets"],
         )
-        try:
-            written = sorted(
-                int(d.split("=", 1)[1])
-                for d in os.listdir(out)
-                if d.startswith("_bucket=")
-            )
-        except FileNotFoundError:  # empty state
-            written = []
-        self._write_pointer(
-            old_spec.name,
-            {
-                **pointer,
-                "versions": {str(b): version for b in written},
-                "next_version": version + 1,
-            },
-        )
-        self._mark_unreferenced(old_spec.name, pointer["versions"])
-        return len(written)
 
     def merge_batch(
         self,
@@ -593,8 +592,8 @@ class ParquetStateStore:
         # PERMISSIVE-nulled into the batch), not a key. This is the PK
         # semantics the reference's Postgres table enforced - except there
         # the violation CRASHED the stream on every replay (poison pill);
-        # here the row simply never enters state. The DuckDB backend
-        # applies the identical WHERE so both backends agree (pinned by
+        # here the row simply never enters state. The JDBC backend
+        # applies the identical filter so both backends agree (pinned by
         # test_null_keyed_rows_excluded_both_backends).
         key_not_null = F.lit(True)
         for k in spec.key_cols:

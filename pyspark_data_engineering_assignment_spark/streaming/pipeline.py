@@ -29,6 +29,7 @@ anti-joining against the cumulative set of already-emitted detection keys
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,6 +56,7 @@ from pyspark_data_engineering_assignment_spark.state.store import (
     MERCHANT_GENDER_SUMMARY,
     MERCHANT_SUMMARY,
     ParquetStateStore,
+    StateStore,
     StateTableSpec,
 )
 from pyspark_data_engineering_assignment_spark.streaming.sink import (
@@ -89,7 +91,7 @@ class DetectionPipeline:
     def __init__(
         self,
         spark: SparkSession,
-        store: ParquetStateStore,
+        store: StateStore,
         importance: DataFrame,
         detections_dir: str,
         config: EngineConfig | None = None,
@@ -118,80 +120,69 @@ class DetectionPipeline:
         """The foreachBatch body. Returns the number of detections written
         (0 for an empty batch). Safe to replay with the same batch_id."""
         y_start = self.clock.now_str()
-        if batch_df.isEmpty():  # T8 short-circuit, a single probe job
-            return 0
-        raw = None
-        if self.config.quarantine_dir and "_corrupt_record" in batch_df.columns:
-            # quarantine channel: rows the schema rejected under a
-            # correct header arrive with the RAW line in the declared
-            # corrupt column. They are written whole (idempotent
-            # overwrite per batch_id, same replay contract as the
-            # detection sink) and excluded from state/detections -
-            # partial-and-silent is the failure mode that poisons a
-            # 100 TB ingest; repair-and-refeed is the operator's call.
-            # persist FIRST: Spark disallows queries over a raw CSV
-            # scan whose referenced columns are only the corrupt-record
-            # column (SPARK-21610); the cached parse is the sanctioned
-            # route, and the batch is about to be persisted anyway.
-            raw = batch_df.persist()
-            bad = raw.filter(F.col("_corrupt_record").isNotNull())
-            if not bad.isEmpty():
-                bad.select("_corrupt_record").write.mode("overwrite").parquet(
-                    os.path.join(
-                        self.config.quarantine_dir, f"batch_id={batch_id}"
-                    )
-                )
-            batch_df = raw.filter(
-                F.col("_corrupt_record").isNull()
-            ).drop("_corrupt_record")
-            if batch_df.isEmpty():
-                raw.unpersist()
-                return 0
+        # persist FIRST, then probe the cached frame: every job below
+        # reads the cache, so the source is scanned once per batch.
         batch_df.persist()
         try:
+            clean = batch_df
+            if self.config.quarantine_dir and "_corrupt_record" in batch_df.columns:
+                # quarantine channel: rows the schema rejected under a
+                # correct header arrive with the RAW line in the declared
+                # corrupt column. They are written whole (idempotent
+                # overwrite per batch_id, same replay contract as the
+                # detection sink) and excluded from state/detections -
+                # partial-and-silent is the failure mode that poisons a
+                # 100 TB ingest; repair-and-refeed is the operator's call.
+                # Filtering the cached parse also keeps Spark from
+                # refusing a raw CSV scan whose referenced columns are
+                # only the corrupt-record column (SPARK-21610).
+                bad = batch_df.filter(F.col("_corrupt_record").isNotNull())
+                if not bad.isEmpty():
+                    bad.select("_corrupt_record").write.mode("overwrite").parquet(
+                        os.path.join(
+                            self.config.quarantine_dir, f"batch_id={batch_id}"
+                        )
+                    )
+                clean = batch_df.filter(
+                    F.col("_corrupt_record").isNull()
+                ).drop("_corrupt_record")
+            if clean.isEmpty():  # T8 short-circuit
+                return 0
             # 1. partial aggregates -> final additive merge (idempotent).
             # last_updated = batch-start time from the injected clock, so
             # golden tests see deterministic state snapshots.
-            # The three merges hit three disjoint tables, so when the
-            # backend allows it they run as CONCURRENT Spark jobs from
-            # driver threads (the standard multi-job driver pattern): the
-            # scheduler interleaves their tasks and the batch wall time is
-            # the slowest merge, not the sum (measured at 200k rows:
-            # ~8s sequential -> ~4s concurrent). Ordering is irrelevant -
-            # detection reads state only after all three complete.
+            # The three merges hit three disjoint tables, so they are
+            # submitted as CONCURRENT Spark jobs from driver threads (the
+            # standard multi-job driver pattern): the scheduler
+            # interleaves their tasks and the batch wall time is the
+            # slowest merge, not the sum (measured at 200k rows: ~8s
+            # sequential -> ~4s concurrent). A single-connection backend
+            # serializes them behind its own lock. Ordering is
+            # irrelevant - detection reads state only after all three
+            # complete.
             merges = [
-                (MERCHANT_SUMMARY, merchant_batch_aggregate(batch_df)),
+                (MERCHANT_SUMMARY, merchant_batch_aggregate(clean)),
                 (
                     CUSTOMER_MERCHANT_SUMMARY,
-                    customer_merchant_batch_aggregate(batch_df),
+                    customer_merchant_batch_aggregate(clean),
                 ),
-                (MERCHANT_GENDER_SUMMARY, gender_pivot_aggregate(batch_df)),
+                (MERCHANT_GENDER_SUMMARY, gender_pivot_aggregate(clean)),
             ]
-            if getattr(self.store, "supports_concurrent_merges", False):
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=len(merges)) as pool:
-                    futures = [
-                        pool.submit(
-                            self.store.merge_batch,
-                            spec,
-                            agg,
-                            batch_id,
-                            now=y_start,
-                        )
-                        for spec, agg in merges
-                    ]
-                    for fut in futures:
-                        fut.result()
-            else:
-                for spec, agg in merges:
-                    self.store.merge_batch(spec, agg, batch_id, now=y_start)
+            with ThreadPoolExecutor(max_workers=len(merges)) as pool:
+                futures = [
+                    pool.submit(
+                        self.store.merge_batch, spec, agg, batch_id, now=y_start
+                    )
+                    for spec, agg in merges
+                ]
+                for fut in futures:
+                    fut.result()
             # 2. read updated cumulative state.
             merchant_state = self.store.read_state(MERCHANT_SUMMARY)
             cm_state = self.store.read_state(CUSTOMER_MERCHANT_SUMMARY)
             gender_state = self.store.read_state(MERCHANT_GENDER_SUMMARY)
             # 3. enrich the batch with the broadcast importance dimension.
-            enriched = enrich_batch(batch_df, self.importance)
+            enriched = enrich_batch(clean, self.importance)
             # 4. evaluate the three patterns, union the detections.
             detections = detect_all(
                 merchant_state,
@@ -267,8 +258,6 @@ class DetectionPipeline:
             )
         finally:
             batch_df.unpersist()
-            if raw is not None:
-                raw.unpersist()
 
     # ------------------------------------------------------------------
     def run_stream(self, input_dir: str, checkpoint_dir: str) -> StreamingQuery:

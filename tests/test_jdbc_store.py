@@ -15,10 +15,10 @@ Two halves:
      ``COALESCE(x, 0)`` on both sides.
 
   2. **Behavioral agreement.** The store satisfies the same contract
-     as the other two backends (see also the parametrized suite in
-     ``test_state_store.py``, which this file extends with "jdbc"), and
-     the full streaming flagship runs against it with state matching
-     the DuckDB oracle over the exact fed chunks.
+     as the parquet backend (see also the parametrized suite in
+     ``test_state_store.py``, which runs every merge test on both); the
+     full streaming flagship runs against it in
+     ``test_streaming_e2e.py::test_streaming_flagship_sf_state_oracle``.
 """
 
 from __future__ import annotations
@@ -144,10 +144,6 @@ def test_merge_leaves_no_temp_tables(spark, jstore):
     transaction: after N merges the database holds only the target and
     ledger tables (the reference leaked one temp table per batch per
     state table into the shared RDBMS)."""
-    from pyspark_data_engineering_assignment_spark.state.duckdb_store import (
-        _ddl_type,  # noqa: F401  (import proves shared dialect module)
-    )
-
     schema = MERCHANT_SUMMARY
     for bid in range(3):
         batch = spark.createDataFrame(
@@ -217,60 +213,6 @@ def test_batch_meta_roundtrip(spark, jstore):
     assert jstore.batch_meta(MERCHANT_SUMMARY, 0) == {"n": 50}
     assert jstore.batch_meta(MERCHANT_SUMMARY, 1) is None
     assert jstore.last_batch_id(MERCHANT_SUMMARY) == 0
-
-
-def test_flagship_pipeline_runs_on_jdbc_store(spark, tmp_path):
-    """End-to-end: the full streaming flagship over the JDBC-protocol
-    backend, state oracle-checked against DuckDB groupBys of the exact
-    fed chunk CSVs (same gate as the parquet/duckdb backends)."""
-    import os
-
-    import duckdb
-
-    from pyspark_data_engineering_assignment_spark.tools.events_feed import (
-        run_events_flagship,
-    )
-
-    run = run_events_flagship(
-        spark,
-        "/root/testdata/sf0.001",
-        str(tmp_path),
-        chunk_rows=500,
-        store_factory=lambda sp, wd: JdbcStateStore.duckdb(
-            sp, os.path.join(wd, "state.duckdb")
-        ),
-    )
-    store = run["store"]
-    con = duckdb.connect()
-    files = ", ".join(f"'{p}'" for p in run["chunks"])
-    con.execute(
-        f"CREATE VIEW tx AS SELECT * FROM read_csv_auto([{files}], "
-        "types={'amount': 'DECIMAL(18,2)', 'customer': 'VARCHAR', "
-        "'merchant': 'VARCHAR', 'gender': 'VARCHAR'})"
-    )
-    got = {
-        r["merchant_id"]: r["total_transactions"]
-        for r in store.read_state(MERCHANT_SUMMARY).collect()
-    }
-    want = dict(
-        con.execute("SELECT merchant, count(*) FROM tx GROUP BY 1").fetchall()
-    )
-    assert got == want and got
-    got_g = {
-        r["merchant_id"]: (
-            r["male_transaction_count"],
-            r["female_transaction_count"],
-        )
-        for r in store.read_state(MERCHANT_GENDER_SUMMARY).collect()
-    }
-    want_g = {
-        m: (mm, ff)
-        for m, mm, ff in con.execute(
-            "SELECT merchant, count(*) FILTER (WHERE gender = 'M'), "
-            "count(*) FILTER (WHERE gender = 'F') FROM tx GROUP BY 1"
-        ).fetchall()
-    }
-    assert got_g == want_g
 
 
 # --- paramstyle portability (round-12 verdict task #8) ---------------------

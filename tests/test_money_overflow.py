@@ -10,7 +10,7 @@ The contract pinned here, at every level money crosses a narrower type:
   ``try_cast`` silently NULLed it and the batch sum dropped real money;
 * per-batch: a batch total over DECIMAL(18,2) refuses loudly;
 * cumulative: an additive merge whose running total overflows refuses
-  loudly on ALL THREE backends, and the parquet store's refused merge
+  loudly on BOTH backends, and the parquet store's refused merge
   leaves prior state intact (atomic pointer swap never happened);
 * ANSI-independence: the guards are explicit ``raise_error`` arms, so
   a deployment running ``spark.sql.ansi.enabled=false`` (where a plain
@@ -123,35 +123,42 @@ def test_cumulative_merge_overflow_refuses_and_keeps_state(
     assert store.last_batch_id(CUSTOMER_MERCHANT_SUMMARY) == 0
 
 
-@pytest.mark.parametrize("backend", ["duckdb", "jdbc"])
+@pytest.mark.parametrize("backend", ["jdbc"])
 def test_cumulative_merge_overflow_refuses_rdbms_backends(
-    spark, tmp_path, backend
+    spark, tmp_path, ansi_off, backend
 ):
-    """The RDBMS backends inherit the reference's own refusal: DuckDB's
-    DECIMAL(18,2) column (same dialect as the Postgres NUMERIC the
-    reference writes to) raises on an additive UPSERT that overflows -
-    never stores a wrapped or NULL total."""
-    if backend == "duckdb":
-        from pyspark_data_engineering_assignment_spark.state.duckdb_store import (
-            DuckDBStateStore,
-        )
+    """Every RDBMS backend refuses both ways a stored total can overflow,
+    never storing a wrapped or NULL total (ids match the ``store``
+    fixtures' backend ids; ``jdbc`` is ``JdbcStateStore.duckdb``):
 
-        store = DuckDBStateStore(spark, str(tmp_path / "s.duckdb"))
-    else:
-        from pyspark_data_engineering_assignment_spark.state.jdbc_store import (
-            JdbcStateStore,
-        )
-
-        store = JdbcStateStore.duckdb(spark, str(tmp_path / "s.jdbc.duckdb"))
-    b0 = spark.createDataFrame(
-        [("C1", "M1", 1, Decimal("6000000000000000.00"))], CM_AGG_SCHEMA
+    * across batches, DuckDB's DECIMAL(18,2) column (same dialect as
+      the Postgres NUMERIC the reference writes to) raises on the
+      additive UPSERT;
+    * within one batch, two rows for one key are re-aggregated in Spark
+      before the UPSERT, by the parquet backend's overflow-checked SUM
+      (a plain cast under ANSI off stored ``total_amount_sum=None``)."""
+    from pyspark_data_engineering_assignment_spark.state.jdbc_store import (
+        JdbcStateStore,
     )
+
+    store = JdbcStateStore.duckdb(spark, str(tmp_path / f"s.{backend}.duckdb"))
+    big = Decimal("6000000000000000.00")
+    b0 = spark.createDataFrame([("C1", "M1", 1, big)], CM_AGG_SCHEMA)
     store.merge_batch(CUSTOMER_MERCHANT_SUMMARY, b0, batch_id=0, now=NOW)
-    b1 = spark.createDataFrame(
-        [("C1", "M1", 1, Decimal("6000000000000000.00"))], CM_AGG_SCHEMA
-    )
+    b1 = spark.createDataFrame([("C1", "M1", 1, big)], CM_AGG_SCHEMA)
     with pytest.raises(Exception, match="(?i)overflow|out of range|conversion"):
         store.merge_batch(CUSTOMER_MERCHANT_SUMMARY, b1, batch_id=1, now=NOW)
+
+    dup = spark.createDataFrame(
+        [("C2", "M1", 1, big), ("C2", "M1", 1, big)], CM_AGG_SCHEMA
+    )
+    with pytest.raises(
+        CapturedException, match="money overflow: state.total_amount_sum"
+    ):
+        store.merge_batch(CUSTOMER_MERCHANT_SUMMARY, dup, batch_id=1, now=NOW)
+
     rows = store.read_state(CUSTOMER_MERCHANT_SUMMARY).collect()
-    assert len(rows) == 1
-    assert rows[0]["total_amount_sum"] == Decimal("6000000000000000.00")
+    assert [(r["customer_id"], r["total_amount_sum"]) for r in rows] == [
+        ("C1", big)
+    ]
+    assert store.last_batch_id(CUSTOMER_MERCHANT_SUMMARY) == 0

@@ -1,10 +1,12 @@
 """State-store concurrency pins (round-11).
 
-The ParquetStateStore documents three concurrency contracts that until
-now were asserted only in prose:
+The state stores document these concurrency contracts:
 
-* ``supports_concurrent_merges = True`` - merges to DIFFERENT tables
-  may run from concurrent driver threads (store.py class docstring)
+* merges to DIFFERENT tables may be submitted from concurrent driver
+  threads, as ``DetectionPipeline.process_batch`` does with its three
+  merges (``StateStore`` docstring): ParquetStateStore runs them
+  concurrently, JdbcStateStore serializes them on its one connection,
+  and either way the result equals sequential merges
 * vacuum's returned reclaim count is exact - "a dir already deleted by
   a concurrent vacuum is not counted" (vacuum docstring); round 11
   hardened this from best-effort getmtime probing to an atomic
@@ -23,6 +25,7 @@ from __future__ import annotations
 
 import glob
 import os
+import sys
 import threading
 
 from pyspark.sql import functions as F
@@ -33,9 +36,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pyspark_data_engineering_assignment_spark.state.jdbc_store import JdbcStateStore
 from pyspark_data_engineering_assignment_spark.state.store import (
-
     CUSTOMER_MERCHANT_SUMMARY,
+    MERCHANT_GENDER_SUMMARY,
     MERCHANT_SUMMARY,
     ParquetStateStore,
 )
@@ -103,7 +107,6 @@ def test_concurrent_vacuums_count_each_dir_exactly_once(spark, tmp_path):
 
 def test_concurrent_merges_to_different_tables(spark, tmp_path):
     store = ParquetStateStore(spark, str(tmp_path), n_buckets=4)
-    assert store.supports_concurrent_merges
 
     cm_schema = StructType(
         [
@@ -158,6 +161,73 @@ def test_concurrent_merges_to_different_tables(spark, tmp_path):
         for r in store.read_state(CUSTOMER_MERCHANT_SUMMARY).collect()
     }
     assert cm == {("C1", "M1"): (4, "40.00")}
+
+
+def test_jdbc_concurrent_merges_equal_sequential(spark, tmp_path):
+    """Three threads merge into three tables of ONE JdbcStateStore at
+    once, as the pipeline submits them; the store's lock serializes use
+    of its single DuckDB connection, so every table ends with the same
+    rows and ``last_batch_id`` as a store merged sequentially, and no
+    thread sees a database error."""
+    from decimal import Decimal
+
+    batches = {
+        MERCHANT_SUMMARY: "merchant_id string, total_transactions long",
+        CUSTOMER_MERCHANT_SUMMARY: (
+            "customer_id string, merchant_id string, "
+            "transaction_count long, total_amount_sum decimal(18,2)"
+        ),
+        MERCHANT_GENDER_SUMMARY: (
+            "merchant_id string, male_transaction_count long, "
+            "female_transaction_count long"
+        ),
+    }
+
+    def rows(spec, i):
+        if spec is MERCHANT_SUMMARY:
+            return [("M1", 2), (f"M{i}", 1)]
+        if spec is CUSTOMER_MERCHANT_SUMMARY:
+            return [("C1", "M1", 1, Decimal("10.05")), (f"C{i}", "M2", 2, None)]
+        return [("M1", i, 1)]
+
+    def merge_all(store, spec):
+        for i in range(4):
+            b = spark.createDataFrame(rows(spec, i), batches[spec])
+            store.merge_batch(spec, b, batch_id=i, now=NOW)
+
+    sequential = JdbcStateStore.duckdb(spark, str(tmp_path / "seq.duckdb"))
+    for spec in batches:
+        merge_all(sequential, spec)
+
+    concurrent = JdbcStateStore.duckdb(spark, str(tmp_path / "conc.duckdb"))
+    errors = []
+    barrier = threading.Barrier(len(batches))
+
+    def worker(spec):
+        try:
+            barrier.wait()  # start all three merges together
+            merge_all(concurrent, spec)
+        except Exception as ex:  # noqa: BLE001 - surfaced via assert below
+            errors.append(ex)
+
+    threads = [threading.Thread(target=worker, args=(s,)) for s in batches]
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # interleave the threads' statements
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=600)
+    finally:
+        sys.setswitchinterval(old_interval)
+
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    for spec in batches:
+        assert sorted(concurrent.read_state(spec).collect()) == sorted(
+            sequential.read_state(spec).collect()
+        ), spec.name
+        assert concurrent.last_batch_id(spec) == 3
 
 
 def test_polling_reader_sees_only_committed_prefixes(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""State-table schema evolution (round-11) across all three backends.
+"""State-table schema evolution (round-11) across both backends.
 
 A long-lived pipeline WILL add a counter to its cumulative state; at
 100 TB the table cannot be dropped and re-accumulated, and the
@@ -76,20 +76,14 @@ def _state(store, spec):
 def _make_store(backend, spark, tmp_path):
     if backend == "parquet":
         return ParquetStateStore(spark, str(tmp_path), n_buckets=4)
-    if backend == "jdbc":
-        from pyspark_data_engineering_assignment_spark.state.jdbc_store import (
-            JdbcStateStore,
-        )
-
-        return JdbcStateStore.duckdb(spark, str(tmp_path) + ".jdbc.duckdb")
-    from pyspark_data_engineering_assignment_spark.state.duckdb_store import (
-        DuckDBStateStore,
+    from pyspark_data_engineering_assignment_spark.state.jdbc_store import (
+        JdbcStateStore,
     )
 
-    return DuckDBStateStore(spark, str(tmp_path) + ".duckdb")
+    return JdbcStateStore.duckdb(spark, str(tmp_path) + ".jdbc.duckdb")
 
 
-@pytest.fixture(params=["parquet", "duckdb", "jdbc"])
+@pytest.fixture(params=["parquet", "jdbc"])
 def store(request, spark, tmp_path):
     return _make_store(request.param, spark, tmp_path)
 

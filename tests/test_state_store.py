@@ -23,6 +23,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pyspark_data_engineering_assignment_spark.state.jdbc_store import JdbcStateStore
 from pyspark_data_engineering_assignment_spark.state.store import (
     CUSTOMER_MERCHANT_SUMMARY,
     MERCHANT_SUMMARY,
@@ -51,24 +52,14 @@ CM_AGG_SCHEMA = StructType(
 def _make_store(backend: str, spark, path):
     if backend == "parquet":
         return ParquetStateStore(spark, str(path))
-    if backend == "jdbc":
-        from pyspark_data_engineering_assignment_spark.state.jdbc_store import (
-            JdbcStateStore,
-        )
-
-        return JdbcStateStore.duckdb(spark, str(path) + ".jdbc.duckdb")
-    from pyspark_data_engineering_assignment_spark.state.duckdb_store import (
-        DuckDBStateStore,
-    )
-
-    return DuckDBStateStore(spark, str(path) + ".duckdb")
+    return JdbcStateStore.duckdb(spark, str(path) + ".jdbc.duckdb")
 
 
-@pytest.fixture(params=["parquet", "duckdb", "jdbc"])
+@pytest.fixture(params=["parquet", "jdbc"])
 def store(request, spark, tmp_path):
-    """Every merge-semantics test runs against ALL THREE backends: the
-    distributed parquet/Delta-shaped store, the embedded RDBMS UPSERT
-    store, and the reference-protocol temp-table+UPSERT JDBC store."""
+    """Every merge-semantics test runs against BOTH backends: the
+    distributed parquet/Delta-shaped store and the reference-protocol
+    temp-table+UPSERT JDBC store (on embedded DuckDB)."""
     return _make_store(request.param, spark, tmp_path / "state")
 
 
@@ -144,7 +135,7 @@ def test_null_keyed_rows_excluded_both_backends(spark, store):
     ``NOT NULL constraint failed`` - and since the poisoned source file is
     still there on restart, the stream crash-LOOPED forever - while the
     parquet store silently accumulated a NULL-keyed state row. Now both
-    exclude NULL-keyed rows and agree; non-null keys in the same batch
+    backends exclude NULL-keyed rows and agree; non-null keys in the same batch
     merge unaffected."""
     nullable = StructType(
         [
@@ -196,7 +187,7 @@ def test_all_null_keyed_batch_is_empty_merge(spark, store):
     assert store.last_batch_id(MERCHANT_SUMMARY) == 1
 
 
-@pytest.mark.parametrize("backend", ["parquet", "duckdb", "jdbc"])
+@pytest.mark.parametrize("backend", ["parquet", "jdbc"])
 def test_batch_invariance(spark, tmp_path, backend):
     """Chunking must not matter: one big batch vs three small ones yield
     the same final state (survey §5.4 property)."""
@@ -267,7 +258,7 @@ def test_vacuum_removes_only_unreferenced_snapshots(spark, tmp_path):
     assert store.vacuum(MERCHANT_SUMMARY) == 0  # idempotent
 
 
-@pytest.mark.parametrize("backend", ["parquet", "duckdb", "jdbc"])
+@pytest.mark.parametrize("backend", ["parquet", "jdbc"])
 def test_backends_agree(spark, tmp_path, backend):
     """Cross-backend contract: identical batch sequence -> identical
     state rows (modulo last_updated, pinned via now=...)."""
@@ -313,15 +304,14 @@ def test_merge_without_meta_clears_stale_meta(spark, store):
 
 
 def test_duckdb_driver_boundary_guard(spark, tmp_path):
-    """The embedded backend tops out at max_batch_rows: a fact-sized
-    frame routed at it raises instead of OOMing the driver, and the
-    over-limit batch is NOT applied (transactional no-op)."""
-    from pyspark_data_engineering_assignment_spark.state.duckdb_store import (
-        DuckDBStateStore,
-    )
+    """The DuckDB-wired JDBC backend tops out at max_batch_rows: a
+    fact-sized frame routed at it raises instead of OOMing the driver,
+    and the over-limit batch is NOT applied (transactional no-op)."""
     from pyspark.sql import functions as F
 
-    store = DuckDBStateStore(spark, str(tmp_path / "guard.duckdb"), max_batch_rows=10)
+    store = JdbcStateStore.duckdb(
+        spark, str(tmp_path / "guard.duckdb"), max_batch_rows=10
+    )
     big = spark.range(11).select(
         F.concat(F.lit("M"), F.col("id")).alias("merchant_id"),
         F.lit(1).cast("long").alias("total_transactions"),
@@ -340,12 +330,7 @@ def test_state_store_protocol_is_satisfied():
     """The Protocol declares everything DetectionPipeline calls
     (read_state/merge_batch/last_batch_id/batch_meta/vacuum); both
     backends must structurally provide the full surface."""
-    from pyspark_data_engineering_assignment_spark.state.duckdb_store import (
-        DuckDBStateStore,
-    )
-    from pyspark_data_engineering_assignment_spark.state.store import StateStore
-
-    for backend in (ParquetStateStore, DuckDBStateStore):
+    for backend in (ParquetStateStore, JdbcStateStore):
         for method in ("read_state", "merge_batch", "last_batch_id",
                        "batch_meta", "vacuum"):
             assert callable(getattr(backend, method)), (backend, method)

@@ -23,6 +23,7 @@ from pyspark_data_engineering_assignment_spark.config import EngineConfig, Patte
 from pyspark_data_engineering_assignment_spark.patterns.detect import FixedClock
 from pyspark_data_engineering_assignment_spark.schemas import TRANSACTION_SCHEMA
 from pyspark_data_engineering_assignment_spark.sources.readers import read_csv, read_importance
+from pyspark_data_engineering_assignment_spark.state.jdbc_store import JdbcStateStore
 from pyspark_data_engineering_assignment_spark.state.store import (
     CUSTOMER_MERCHANT_SUMMARY,
     MERCHANT_GENDER_SUMMARY,
@@ -317,17 +318,13 @@ def test_processing_time_trigger(spark, tmp_path):
 
 
 def test_pipeline_with_duckdb_state_backend(spark, tmp_path):
-    """The pipeline is backend-agnostic: the reference-parity RDBMS
-    UPSERT store yields the same per-batch detections as the parquet
-    store (also exercises process_batch as a plain batch loop -
+    """The pipeline is backend-agnostic: the reference-protocol RDBMS
+    UPSERT store on DuckDB yields the same per-batch detections as the
+    parquet store (also exercises process_batch as a plain batch loop -
     backfill without a stream)."""
-    from pyspark_data_engineering_assignment_spark.state.duckdb_store import (
-        DuckDBStateStore,
-    )
-
     input_dir, imp_path, chunk_paths = _write_inputs(tmp_path)
     importance = read_importance(spark, imp_path)
-    store = DuckDBStateStore(spark, str(tmp_path / "state.duckdb"))
+    store = JdbcStateStore.duckdb(spark, str(tmp_path / "state.duckdb"))
     detections_dir = str(tmp_path / "detections")
     pipe = DetectionPipeline(
         spark, store, importance, detections_dir, config=EngineConfig(), clock=CLOCK
@@ -376,6 +373,27 @@ def test_pipeline_percentile_threshold_path(spark, tmp_path):
     assert got.get(3, Counter()) == Counter(
         {("PatId2", "CHILD", "C1", "M1"): 1, ("PatId3", "DEI-NEEDED", "", "M2"): 1}
     )
+
+
+def test_each_batch_reads_its_source_rows_once(spark, tmp_path):
+    """The stream's numInputRows, summed over every micro-batch, equals
+    the rows in the files it read: process_batch scans its source once.
+    Spark counts every scan of the batch's source, so an emptiness probe
+    run before the batch is persisted counts the probed rows again."""
+    input_dir, imp_path, chunk_paths = _write_inputs(tmp_path)
+    pipe = DetectionPipeline(
+        spark,
+        ParquetStateStore(spark, str(tmp_path / "state")),
+        read_importance(spark, imp_path),
+        str(tmp_path / "detections"),
+        config=EngineConfig(),
+        clock=CLOCK,
+    )
+    q = pipe.run_stream(input_dir, str(tmp_path / "checkpoint"))
+    q.awaitTermination()
+    rows_in_files = sum(len(pd.read_csv(p)) for p in chunk_paths)
+    assert rows_in_files == len(ROWS)
+    assert sum(p["numInputRows"] for p in q.recentProgress) == rows_in_files
 
 
 def test_empty_batch_short_circuit(spark, tmp_path):
@@ -534,7 +552,7 @@ def _write_importance_only(tmp_path) -> str:
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("backend", ["parquet", "duckdb"])
+@pytest.mark.parametrize("backend", ["parquet", "jdbc"])
 def test_streaming_flagship_sf_state_oracle(spark, tmp_path, backend):
     """The streaming flagship at driver scale: feed the SF events table
     (mapped to transactions exactly like the registry's pattern queries
@@ -546,10 +564,10 @@ def test_streaming_flagship_sf_state_oracle(spark, tmp_path, backend):
     batch aggregate, penny-exactly, at any chunking.
 
     Parameterized over BOTH state backends, so the reference's RDBMS
-    ``INSERT .. ON CONFLICT DO UPDATE`` protocol (DuckDB store) is
-    validated at flagship scale too, not just in unit tests - including
-    that the pipeline correctly falls back to sequential merges for a
-    backend whose connection is not thread-safe.
+    ``INSERT .. ON CONFLICT DO UPDATE`` protocol (JDBC store on DuckDB)
+    is validated at flagship scale too, not just in unit tests -
+    including that the pipeline's concurrent merges are safe on a
+    backend with one connection.
 
     Runs at sf0.01 (2.5s, 10k rows); bench.py runs the same flagship at
     sf0.1 and reports throughput as the streaming_sf section.
@@ -561,13 +579,10 @@ def test_streaming_flagship_sf_state_oracle(spark, tmp_path, backend):
     )
 
     factory = None
-    if backend == "duckdb":
-        from pyspark_data_engineering_assignment_spark.state.duckdb_store import (
-            DuckDBStateStore,
-        )
+    if backend == "jdbc":
 
         def factory(sp, workdir):
-            return DuckDBStateStore(sp, os.path.join(workdir, "state.duckdb"))
+            return JdbcStateStore.duckdb(sp, os.path.join(workdir, "state.duckdb"))
 
     sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
     run = run_events_flagship(
@@ -627,16 +642,12 @@ def test_malformed_chunk_is_not_a_poison_pill(spark, tmp_path):
     """System-level pin of the NULL-key state contract: a chunk whose
     rows are malformed (wrong arity / untypable - PERMISSIVE nulls every
     field, so the batch aggregates carry NULL merchant/customer keys)
-    must not take the stream down. Run against the DuckDB backend
+    must not take the stream down. Run against the RDBMS backend
     because that is where it crash-LOOPED before the fix (the PRIMARY
     KEY threw on the NULL key, and the poisoned chunk file survives
     restart, so every retry hit the same error). The clean chunks'
     detections and final state must be exactly the clean run's."""
     import time as _time
-
-    from pyspark_data_engineering_assignment_spark.state.duckdb_store import (
-        DuckDBStateStore,
-    )
 
     input_dir, imp_path, chunk_paths = _write_inputs(tmp_path)
     # a fifth chunk of pure garbage, mtime-ordered after the real four
@@ -649,7 +660,7 @@ def test_malformed_chunk_is_not_a_poison_pill(spark, tmp_path):
     os.utime(poison, (mt, mt))
 
     importance = read_importance(spark, imp_path)
-    store = DuckDBStateStore(spark, str(tmp_path / "state.duckdb"))
+    store = JdbcStateStore.duckdb(spark, str(tmp_path / "state.duckdb"))
     detections_dir = str(tmp_path / "detections")
     pipe = DetectionPipeline(
         spark, store, importance, detections_dir, config=EngineConfig(),
